@@ -1,31 +1,42 @@
-"""Persist-lifecycle helpers shared by the iterative operators
-(clustering's Lloyd loop, the BPE merge-learning loop, DSIR, power
-iteration).
+"""The one materialization policy: every operator that keeps data in
+Spark's block store goes through this module (a guard test fails on
+``.persist(``, ``.cache(``, ``.localCheckpoint(`` or ``.checkpoint(``
+anywhere else under ``operators/``).
 
-Spark never auto-unpersists: across a 150+-op correctness gate plus
-repeated bench iterations, leaked cache blocks accumulate for the
-session lifetime and show up as memory-pressure-driven bench drift
-(and, worse, Spark's CacheManager silently substitutes a leaked
-InMemoryRelation into any later plan that matches it -- the r8 bench
-cache-subsidy bug). Every ``persist()`` in an iterative operator goes
-through :func:`persist_tracked`; the registry is a STACK of scopes so
-lifetimes cannot cross-contaminate:
+- :func:`persist_tracked` keeps lineage: for an input that later stages
+  re-read (a k-means training frame, a PCA basis). A lost block is
+  recomputed.
+- :func:`checkpoint_tracked` cuts lineage (``localCheckpoint``): for a
+  self-referencing loop, whose step i reads step i-1 more than once
+  (BPE merges, greedy k-center, label propagation) so the un-cut plan
+  doubles per round; and for a superstep with several consumers, whose
+  upstream would otherwise be re-planned and re-run per consumer.
 
-- :func:`cache_scope` pushes a fresh scope and -- in a ``finally`` --
-  unpersists everything that scope tracked, so an operator that raises
-  mid-build cannot pin frames for an unrelated later query, and a
-  finalize-using op composed inside another persist-using op drains
-  only its OWN scope, never its caller's live caches.
-- :func:`scoped` wraps a query fn ``(spark, sf_dir) -> DataFrame`` in
-  :func:`cache_scope`; every registered query that persists uses it.
-- :func:`finalize` materializes the small result rows (inside a
-  ``try/finally`` that drains the current scope) and returns a frame
-  rebuilt from local rows, valid after its cached inputs are gone (the
-  registered-query materialization idiom evolution.py pioneered).
+Both record what they materialized in the innermost scope of a stack,
+and draining a scope unpersists all of it. Spark never unpersists on
+its own, and its CacheManager substitutes a leaked InMemoryRelation
+into any later plan that matches it.
 
-Queries execute sequentially per session (driver gate / pytest), so a
-module-level stack is safe here; the stack makes NESTED composition
-safe too, which the old flat list was not (r9 ADVICE).
+- :func:`cache_scope` drains its scope on exit, even on an exception,
+  and a nested op drains only its own scope, never its caller's.
+- :func:`scoped` runs a query fn ``(spark, sf_dir) -> DataFrame`` in
+  its own scope, so it must collect before returning: :func:`finalize`
+  collects the small result, drains the scope (in a ``finally``) and
+  returns a frame rebuilt from the local rows. A checkpointed frame
+  read after its scope drained fails loudly
+  (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND).
+- Base-scope rule: whatever is materialized outside any scope (a
+  lazily returned, unscoped query; a plan test poking a builder) stays
+  until :func:`release_caches` runs there. Checkpoints are recorded by
+  RDD id, not py4j handle, so the base scope pins no JVM object and
+  Spark's ContextCleaner still reclaims an unscoped checkpoint once its
+  frame is garbage.
+
+:func:`keep_lineage` is a test seam: inside it, checkpoint_tracked
+returns its input unchanged, so a plan test sees what a cut hides.
+
+Queries execute sequentially per session (driver gate / pytest), so
+module-level state is safe here.
 """
 
 from __future__ import annotations
@@ -34,11 +45,12 @@ import functools
 from collections.abc import Callable, Iterator
 from contextlib import contextmanager
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 
-# Base scope catches persists made outside any cache_scope (e.g. a plan
-# test poking a lazy builder directly); release_caches() drains it.
-_SCOPES: list[list[DataFrame]] = [[]]
+# A scope holds persisted frames and (context, rdd id) checkpoint pairs.
+_SCOPES: list[list[DataFrame | tuple[SparkContext, int]]] = [[]]
+_keep_lineage = False
 
 
 def persist_tracked(df: DataFrame) -> DataFrame:
@@ -48,26 +60,54 @@ def persist_tracked(df: DataFrame) -> DataFrame:
     return df
 
 
-def release_caches() -> None:
-    """Unpersist every frame tracked by the CURRENT scope (also called
-    mid-op once a persisted training input has been fully consumed --
-    e.g. after the k-means index artifact is published to disk)."""
-    scope = _SCOPES[-1]
+def checkpoint_tracked(df: DataFrame, eager: bool = False) -> DataFrame:
+    """localCheckpoint() tracked by RDD id in the innermost live scope;
+    see module doc."""
+    if _keep_lineage:
+        return df
+    df = df.localCheckpoint(eager=eager)
+    rdd_id = df._jdf.queryExecution().logical().rdd().id()
+    _SCOPES[-1].append((df.sparkSession.sparkContext, rdd_id))
+    return df
+
+
+@contextmanager
+def keep_lineage() -> Iterator[None]:
+    """Test seam: checkpoint_tracked is the identity inside the block."""
+    global _keep_lineage
+    prev, _keep_lineage = _keep_lineage, True
+    try:
+        yield
+    finally:
+        _keep_lineage = prev
+
+
+def _drain(scope: list) -> None:
     while scope:
-        scope.pop().unpersist()
+        item = scope.pop()
+        if isinstance(item, DataFrame):
+            item.unpersist()
+            continue
+        sc, rdd_id = item
+        rdd = sc._jsc.getPersistentRDDs().get(rdd_id)
+        if rdd is not None:  # None: the ContextCleaner got there first
+            rdd.unpersist(False)
+
+
+def release_caches() -> None:
+    """Unpersist everything tracked by the CURRENT scope."""
+    _drain(_SCOPES[-1])
 
 
 @contextmanager
 def cache_scope() -> Iterator[None]:
-    """Push a fresh persist-tracking scope; drain it on exit (even on
-    exception), leaving enclosing scopes' caches untouched."""
+    """Push a fresh tracking scope; drain it on exit (even on
+    exception), leaving enclosing scopes' materializations untouched."""
     _SCOPES.append([])
     try:
         yield
     finally:
-        scope = _SCOPES.pop()
-        while scope:
-            scope.pop().unpersist()
+        _drain(_SCOPES.pop())
 
 
 def scoped(fn: Callable[..., DataFrame]) -> Callable[..., DataFrame]:
@@ -83,8 +123,9 @@ def scoped(fn: Callable[..., DataFrame]) -> Callable[..., DataFrame]:
 
 def finalize(spark: SparkSession, out: DataFrame) -> DataFrame:
     """Materialize the small result rows, release the current scope's
-    tracked caches (in a ``finally`` -- a failed collect must not pin
-    them either), and return a frame rebuilt from the local rows."""
+    tracked materializations (in a ``finally`` -- a failed collect must
+    not pin them either), and return a frame rebuilt from the local
+    rows."""
     try:
         rows = out.collect()
     finally:

@@ -48,10 +48,10 @@ from pyspark.sql import functions as F
 
 from ..functions import davg, davg_sql, dround, dround_sql
 from ..sources.parquet import load_table
-from ._cache import scoped as _scoped
+from ._cache import checkpoint_tracked as _checkpoint
 from ._cache import finalize as _finalize
 from ._cache import persist_tracked as _persist
-from ._cache import release_caches  # noqa: F401  (re-export: streaming_queries)
+from ._cache import scoped as _scoped
 from .registry import query
 from .similarity import _COS_SQL, _VEC_FP_SQL, _cos, _cos_pre, _dvec
 from .similarity import _norm
@@ -586,7 +586,6 @@ def _salted_block_dropped(
     key_cols: list[str],
     out_schema: str,
     cap_rows: int | None = None,
-    lineage_cut: bool = True,
 ) -> DataFrame:
     """Keep-first drop set (key_cols..., drop_id) over a (key_cols...,
     vec_id, dv, nrm) member frame, with oversized blocks sub-split by
@@ -615,18 +614,8 @@ def _salted_block_dropped(
     spark = members.sparkSession
     par = spark.sparkContext.defaultParallelism
     keys = list(key_cols)
-    # lineage cut (r20, the BPE-loop lesson): the salt pipeline
-    # references the member frame three times (the block counts, the
-    # total, and the explode), and the callers' persisted k-means
-    # chain is cache-reused at EXECUTION but re-walked by Catalyst per
-    # reference -- the un-truncated salted plan doubled the SemDeDup
-    # plans. The checkpoint materializes once (from the callers'
-    # cache) and every salt-side reference reads the tiny RDD leaf.
-    # ``lineage_cut=False`` is a plan-introspection seam for tests
-    # (the checkpoint hides upstream operators from the optimized
-    # plan, e.g. the capped variant's rank filter).
-    if lineage_cut:
-        members = members.localCheckpoint(eager=False)
+    # three consumers: the block counts, the total and the explode
+    members = _checkpoint(members)
     cnts = members.groupBy(*keys).agg(F.count("*").alias("_blk_n"))
     tot = cnts.agg(F.sum("_blk_n").alias("_tot_n"))
     cap_expr = (
@@ -682,7 +671,6 @@ def _salted_block_dropped(
 def _semantic_dropped(
     assigned: DataFrame,
     max_cluster_pair_members: int | None = None,
-    lineage_cut: bool = True,
 ) -> DataFrame:
     """(cluster, drop_id): vectors with a lower-id cosine near-dup in
     their own cluster (the order-free keep-first rule).
@@ -733,10 +721,7 @@ def _semantic_dropped(
         "cluster", "vec_id", "dv", _norm(F.col("dv")).alias("nrm")
     )
     return _salted_block_dropped(
-        withn,
-        ["cluster"],
-        "cluster bigint, drop_id bigint",
-        lineage_cut=lineage_cut,
+        withn, ["cluster"], "cluster bigint, drop_id bigint"
     )
 
 
@@ -2818,7 +2803,7 @@ def greedy_kcenter_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     size the exemplar budget.
 
     Shape at scale: each pick is ONE corpus pass keeping a running
-    min-distance column (persisted; the new 1-row center rides a
+    min-distance column (checkpointed; the new 1-row center rides a
     broadcast) ending in a 1-row TakeOrdered -- the canonical
     distributed Gonzalez, linear in n per pick with no shuffle of
     vector data; the final assignment scans the 5-row center set
@@ -2852,15 +2837,12 @@ def _kcenter_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(0).cast("int").alias("ord"),
         )
     )
-    # localCheckpoint, not persist (r20, the BPE-loop lesson): pick t
-    # references m(t-1) TWICE (the farthest-point TakeOrdered AND the
-    # running-min update), so an un-truncated logical plan doubles per
-    # pick and Catalyst analysis goes 2^picks. The checkpoint cuts
-    # lineage to the materialized corpus-pass RDD; execution reuse is
-    # what the persist provided, unchanged.
+    # pick t reads m(t-1) twice (farthest-point TakeOrdered and the
+    # running-min update)
     m = emb.crossJoin(F.broadcast(c0.select("cv"))).select(
         "vec_id", "dv", F.expr(_d2_spark_sql("dv", "cv")).alias("mind")
-    ).localCheckpoint(eager=False)
+    )
+    m = _checkpoint(m)
     centers = [c0]
     for t in range(1, _KCENTER_PICKS + 1):
         ct = (
@@ -2880,7 +2862,8 @@ def _kcenter_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.least(
                     F.col("mind"), F.expr(_d2_spark_sql("dv", "cv"))
                 ).alias("mind"),
-            ).localCheckpoint(eager=False)
+            )
+            m = _checkpoint(m)
     cents = centers[0]
     for c in centers[1:]:
         cents = cents.unionAll(c)

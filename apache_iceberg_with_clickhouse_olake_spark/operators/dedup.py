@@ -41,6 +41,7 @@ from ..functions import (
     tokens_sql,
 )
 from ..sources.parquet import load_table, load_table_wide
+from ._cache import checkpoint_tracked as _checkpoint
 from .registry import query
 
 # ---------------------------------------------------------------------------
@@ -503,12 +504,8 @@ def dedup_cascade_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "text")
         .repartition(par, "doc_id")
     )
-    # Materialize the representative set once: three downstream branches
-    # consume it (band pipeline, shingle verify side, the count), and
-    # without a cut each would re-run the fingerprint window shuffle
-    # over the full corpus. On a cluster this is persist()/checkpoint()
-    # -- the same superstep discipline as dedup_cluster_sizes.
-    reps = reps.localCheckpoint(eager=True)
+    # three consumers: band pipeline, shingle verify side, the count
+    reps = _checkpoint(reps, eager=True)
     verified = _minhash_verified_pairs(reps, par)
     total = docs.agg(F.count("*").alias("total_docs"))
     repc = reps.agg(F.count("*").alias("representatives"))
@@ -971,10 +968,9 @@ def _cascade_rep_labels(spark: SparkSession, sf_dir: str, with_prev=False):
     cluster ids. Returns (grouped, reps, labels):
 
     - grouped: every doc with (doc_id, source, text, fp, rn, grp_size),
-    - reps: one row per distinct fingerprint (rn=1), materialized
-      (localCheckpoint superstep -- the banding pipeline, the
-      shingle-verify side, and every consumer would otherwise re-run
-      the fingerprint window over the full corpus),
+    - reps: one row per distinct fingerprint (rn=1), checkpointed
+      (the banding pipeline, the shingle-verify side and every
+      consumer read it),
     - labels: (doc_id, label) for every rep touching a verified
       near-dup edge; label = min doc_id reachable within _CC_ROUNDS.
 
@@ -997,11 +993,11 @@ def _cascade_rep_labels(spark: SparkSession, sf_dir: str, with_prev=False):
         .withColumn("rn", F.row_number().over(w_rn))
         .withColumn("grp_size", F.count("*").over(w_ct))
     )
-    reps = (
+    reps = _checkpoint(
         grouped.filter(F.col("rn") == 1)
         .select("doc_id", "source", "text", "grp_size")
-        .repartition(par, "doc_id")
-        .localCheckpoint(eager=True)
+        .repartition(par, "doc_id"),
+        eager=True,
     )
     verified = _minhash_verified_pairs(reps.select("doc_id", "text"), par)
     edges = verified.filter(F.col("near_dup")).select(
@@ -1010,31 +1006,28 @@ def _cascade_rep_labels(spark: SparkSession, sf_dir: str, with_prev=False):
     sym = edges.unionByName(
         edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
     )
-    # Iterative algorithm hygiene: materialize the edge set once and cut
-    # lineage every round (localCheckpoint), else each round re-embeds
-    # the full LSH pipeline in the plan and it grows exponentially.
     # Repartition on the probe key BEFORE checkpointing: every round
     # joins on sym.b, and a checkpoint captures its partitioning, so all
     # _CC_ROUNDS joins read the materialized edges co-partitioned (only
     # the tiny per-round label frame re-shuffles) instead of re-hashing
     # the edge set each round at whatever fragmented partitioning the
     # verify join happened to leave behind.
-    sym = sym.repartition(par, "b").localCheckpoint(eager=True)
+    sym = _checkpoint(sym.repartition(par, "b"), eager=True)
     labels = (
         sym.select(F.col("a").alias("doc_id")).distinct()
         .withColumn("label", F.col("doc_id"))
     )
     prev = labels
+    # round i reads round i-1 twice (the union and the neighbour join)
     for _ in range(_CC_ROUNDS):
         prev = labels
         neighbor_labels = sym.join(
             labels, sym["b"] == labels["doc_id"]
         ).select(sym["a"].alias("doc_id"), "label")
-        labels = (
+        labels = _checkpoint(
             labels.unionByName(neighbor_labels)
             .groupBy("doc_id")
             .agg(F.min("label").alias("label"))
-            .localCheckpoint(eager=False)
         )
     if with_prev:
         return grouped, reps, labels, prev
@@ -1744,20 +1737,18 @@ def winnowing_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc fingerprint counts attach AFTER pair aggregation, keyed on
     the bounded pair set."""
     par = spark.sparkContext.defaultParallelism
-    # Materialize the winnowed frame once (superstep, same discipline as
-    # dedup_cascade_stats): FOUR consumers follow (posting x2, kept, the
-    # per-doc counts), and -- measured -- the explode generator otherwise
+    # FOUR consumers follow (posting x2, kept, the per-doc counts), and
+    # -- measured -- without the checkpoint the explode generator
     # collapses the staged gram/fps lambdas back into one projection,
     # re-evaluating the whole O(m*w) pipeline per consumer per generated
     # row (65 s vs 1.1 s on the sf0.01 corpus).
-    w = (
+    w = _checkpoint(
         _winnowed(
             load_table(spark, sf_dir, "documents").repartition(
                 par, "doc_id"
             )
-        )
-        .select("doc_id", F.size("fps").alias("n_fps"), "fps")
-        .localCheckpoint(eager=True)
+        ).select("doc_id", F.size("fps").alias("n_fps"), "fps"),
+        eager=True,
     )
     posting = w.select(
         "doc_id", F.explode("fps").alias("fp")
@@ -1938,7 +1929,7 @@ def source_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     superstep -- the same trap winnowing_neardup_pairs documents)."""
     par = spark.sparkContext.defaultParallelism
     docs = load_table(spark, sf_dir, "documents")
-    staged = (
+    staged = _checkpoint(
         docs.repartition(par)
         .select("source", tokens(F.col("text")).alias("toks"),
                 norm_text(F.col("text")).alias("norm"))
@@ -1946,8 +1937,8 @@ def source_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "source",
             F.transform(F.col("sha"), lambda s: md5_int60(s)).alias("hs"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        eager=True,
     )
     sh = staged.select("source", F.explode("hs").alias("sh")).distinct()
     df = sh.groupBy("sh").agg(
@@ -2371,15 +2362,12 @@ def leakage_safe_split_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     #   (set-of-sets distinct == distinct over the doc rows);
     # - per-split n_docs / n_clusters are SUM(c_docs) /
     #   COUNT(DISTINCT cluster_id) over the same grain.
-    lvl1 = (
-        tagged.groupBy("cluster_id", "split")
-        .agg(
+    # two consumers: straddle + per-split stats
+    lvl1 = _checkpoint(
+        tagged.groupBy("cluster_id", "split").agg(
             F.count("*").alias("c_docs"),
             F.collect_set("naive_split").alias("nset"),
         )
-        # two consumers (straddle + per-split stats); materialize once,
-        # same lazy-checkpoint idiom as the propagation rounds above
-        .localCheckpoint(eager=False)
     )
     straddle = (
         lvl1.groupBy("cluster_id")

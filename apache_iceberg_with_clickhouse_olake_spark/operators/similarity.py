@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 
 from ..functions import davg, davg_sql, dround, dround_sql
 from ..sources.parquet import load_table
+from ._cache import checkpoint_tracked as _checkpoint
 from ._cache import finalize as _finalize
 from ._cache import persist_tracked as _persist
 from ._cache import scoped as _scoped
@@ -723,12 +724,8 @@ def embedding_dedup_cascade_stats(
             bands_udf(F.col("embedding")).alias("bands"),
         )
     )
-    # Materialize representatives once: the band explosion, the
-    # vector-joinback side, and the count all consume reps, and without
-    # a cut each branch re-runs the fingerprint window shuffle AND the
-    # band UDF over the corpus. Cluster equivalent: persist/checkpoint
-    # (the dedup_cluster_sizes superstep discipline).
-    reps = reps.localCheckpoint(eager=True)
+    # three consumers: band explosion, vector join-back, the count
+    reps = _checkpoint(reps, eager=True)
     candidates = _embed_candidate_pairs(reps)
     total = emb.agg(F.count("*").alias("total_vectors"))
     repc = reps.agg(F.count("*").alias("representatives"))

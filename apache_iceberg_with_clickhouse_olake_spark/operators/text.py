@@ -37,6 +37,7 @@ from ..functions import (
     tokens_sql,
 )
 from ..sources.parquet import load_table, load_table_wide
+from ._cache import checkpoint_tracked as _checkpoint
 from .registry import query
 
 _TOKS = tokens_sql("text")
@@ -1744,10 +1745,9 @@ def source_unigram_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = docs.select(
         "source", F.explode(tokens(F.col("text"))).alias("term")
     )
-    st = (
-        tok.groupBy("source", "term")
-        .agg(F.count("*").alias("c_st"))
-        .localCheckpoint(eager=True)
+    st = _checkpoint(
+        tok.groupBy("source", "term").agg(F.count("*").alias("c_st")),
+        eager=True,
     )
     tt = st.groupBy("term").agg(
         F.sum("c_st").cast("double").alias("c_t")
@@ -1845,7 +1845,7 @@ def term_cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("df").desc(), "term")
         .limit(_PMI_V)
     )
-    dt = tok.join(F.broadcast(vocab), "term").localCheckpoint(eager=True)
+    dt = _checkpoint(tok.join(F.broadcast(vocab), "term"), eager=True)
     # one-row broadcast scalar, kept IN-PLAN (the r10-ADVICE lazy-scalar
     # rule: an eager .count() here would re-scan documents per
     # invocation even when only the plan is inspected)

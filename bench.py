@@ -157,8 +157,8 @@ def _load_prev_artifact(here: str) -> tuple[dict | None, str | None]:
 # span exceeds ~25% of their median, applied from the measured
 # envelope data (BENCH_NOTES.md). The dual gate judges in-span deltas
 # on these "wide_band" instead of regression/improvement -- such
-# deltas are resolvable only from interleaved whole-process repeats
-# (scripts/ab_dsir.py shape), never from one in-probe sample.
+# deltas are resolvable only from interleaved whole-process repeats,
+# never from one in-probe sample.
 #
 # r16 (r15 ADVICE): the tag is NOT a permanent exemption. Two rules:
 # (1) Escape hatch -- a reading whose raw AND machine-normalized

@@ -492,9 +492,11 @@ def test_kmeans_assignment_is_broadcast_shuffle_free(spark, sf_dir):
     rebuild / final profile aggregations. (Pins the lazy frame -- the
     registered query materializes to local rows, whose plan is just a
     LocalTableScan.)"""
+    from apache_iceberg_with_clickhouse_olake_spark.operators._cache import (
+        release_caches,
+    )
     from apache_iceberg_with_clickhouse_olake_spark.operators.clustering import (
         _kmeans_profile_frame,
-        release_caches,
     )
 
     plan = physical_plan(_kmeans_profile_frame(spark, sf_dir))
@@ -521,11 +523,13 @@ def test_kmeans_vector_side_has_no_shuffle_before_assignment(spark, sf_dir):
 
     from pyspark.sql import functions as F
 
+    from apache_iceberg_with_clickhouse_olake_spark.operators._cache import (
+        release_caches,
+    )
     from apache_iceberg_with_clickhouse_olake_spark.operators.clustering import (
         _assign,
         _dvec,
         _init_centroids,
-        release_caches,
     )
     from apache_iceberg_with_clickhouse_olake_spark.sources.parquet import (
         load_table,
@@ -566,9 +570,11 @@ def test_semantic_dedup_pair_join_is_cluster_keyed(spark, sf_dir):
     a cartesian over the corpus."""
     import re
 
+    from apache_iceberg_with_clickhouse_olake_spark.operators._cache import (
+        release_caches,
+    )
     from apache_iceberg_with_clickhouse_olake_spark.operators.clustering import (
         _semantic_stats_frame,
-        release_caches,
     )
 
     plan = physical_plan(_semantic_stats_frame(spark, sf_dir))
@@ -914,10 +920,12 @@ def test_bpe_iteration_frames_are_vocabulary_sized(spark, sf_dir):
     persisted symbols), and each per-iteration winner attaches as a
     1-row broadcast (BNLJ), never a corpus-shuffling join."""
     from apache_iceberg_with_clickhouse_olake_spark.operators._cache import (
+        keep_lineage,
         release_caches,
     )
     from apache_iceberg_with_clickhouse_olake_spark.operators.tokenizer import (
         _N_MERGES,
+        _learn_merges_frame,
         _merged_symbols,
     )
 
@@ -934,11 +942,17 @@ def test_bpe_iteration_frames_are_vocabulary_sized(spark, sf_dir):
     assert "InMemoryRelation" not in plan, plan
     assert "SortMergeJoin" not in plan, plan
     # the winner attaches as a 1-row broadcast nested-loop, never a
-    # corpus-shuffling join (earlier rounds' identical shape is pinned
-    # by construction: every round is the same fragment over the
-    # previous checkpoint)
+    # corpus-shuffling join
     assert plan.count("BroadcastNestedLoopJoin") >= 1, plan
-    assert _N_MERGES >= 1  # loop actually ran
+    # the non-final rounds: without the cuts every round's fragment
+    # stays in the plan, back to the one corpus pass, and each of the
+    # N-1 applied winners is again a broadcast attach
+    with keep_lineage():
+        plan = physical_plan(_learn_merges_frame(spark, sf_dir))
+    assert "documents.parquet" in plan, plan
+    assert plan.count("BroadcastNestedLoopJoin") >= _N_MERGES - 1, plan
+    assert "SortMergeJoin" not in plan, plan
+    assert "CartesianProduct" not in plan, plan
 
 
 def test_disjunctive_hulls_push_to_both_scans(spark, sf_dir):
@@ -1221,10 +1235,12 @@ def test_persisted_corpus_frames_run_at_full_parallelism(spark, sf_dir):
     (fp/dvec cast) must also sit ABOVE the exchange so the cache-build
     pass itself runs wide -- checked by Project appearing before the
     Exchange line in the physical tree (children print below parents)."""
+    from apache_iceberg_with_clickhouse_olake_spark.operators._cache import (
+        release_caches,
+    )
     from apache_iceberg_with_clickhouse_olake_spark.operators.clustering import (
         _fp_vectors,
         _kmeans_assign,
-        release_caches,
     )
     from apache_iceberg_with_clickhouse_olake_spark.operators.linalg import (
         _pi_vectors,

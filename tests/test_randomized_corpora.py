@@ -39,15 +39,11 @@ from apache_iceberg_with_clickhouse_olake_spark.operators import registry
 from tests.oracle_utils import assert_match
 from tests.test_crafted_corpora import _DOC_QUERIES, _EMB_QUERIES
 
-# r20 (r19 VERDICT item 2): this seeded sweep is the largest block of
-# the default suite's wall (hundreds of Spark+DuckDB cases), which grew
-# past the grading driver's pytest budget (VERIFY_r19 tests_ok=false on
-# wall-clock, zero failures). It is env-gated, NOT deleted: the round
-# close-out runs it with SPARK_GRAFT_FULL_TESTS=1 and records the
-# result in OPTIMIZATION_r20.md; the crafted-corpora suite (fixed
-# pathological cases) and the full 238-query oracle mirror stay in the
-# default run.
-pytestmark = pytest.mark.skipif(
+# The full seeded sweep is the largest block of the suite's wall
+# (hundreds of Spark+DuckDB cases), so it is opt-in with
+# SPARK_GRAFT_FULL_TESTS=1. The default run keeps one stable seed over
+# the corpus queries that cut lineage (_SMOKE_QUERIES).
+_FULL = pytest.mark.skipif(
     not os.environ.get("SPARK_GRAFT_FULL_TESTS"),
     reason="seeded randomized sweep: opt in with SPARK_GRAFT_FULL_TESTS=1",
 )
@@ -58,6 +54,7 @@ registry._load_all()
 # third slot keyed 100*round+2). History: r17 shipped (101, 202, 303);
 # r18 post-close-out probes 717/818 green; r19 rotates in 1902.
 SEEDS = (101, 202, 1902)
+SMOKE_SEED = 101
 
 _DIM = 64
 _SOURCES = ("web", "news", "code", "junk")
@@ -215,9 +212,7 @@ def _gen_events(rng: random.Random) -> list[tuple]:
     return rows
 
 
-@pytest.fixture(scope="module", params=SEEDS)
-def rand_dir(request, spark, tmp_path_factory):
-    seed = request.param
+def _write_corpus(spark, tmp_path_factory, seed: int) -> str:
     d = str(tmp_path_factory.mktemp(f"rand{seed}") / "sf")
     docs = _gen_docs(random.Random(seed))
     emb = _gen_emb(random.Random(seed + 7))
@@ -237,14 +232,36 @@ def rand_dir(request, spark, tmp_path_factory):
     return d
 
 
-@pytest.fixture(scope="module")
-def rand_duck(rand_dir):
+def _duck_views(d: str) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
     for t in ("documents", "embeddings", "events"):
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{rand_dir}/{t}.parquet/*.parquet')"
+            f"read_parquet('{d}/{t}.parquet/*.parquet')"
         )
+    return con
+
+
+@pytest.fixture(scope="module", params=SEEDS)
+def rand_dir(request, spark, tmp_path_factory):
+    return _write_corpus(spark, tmp_path_factory, request.param)
+
+
+@pytest.fixture(scope="module")
+def rand_duck(rand_dir):
+    con = _duck_views(rand_dir)
+    yield con
+    con.close()
+
+
+@pytest.fixture(scope="module")
+def smoke_dir(spark, tmp_path_factory):
+    return _write_corpus(spark, tmp_path_factory, SMOKE_SEED)
+
+
+@pytest.fixture(scope="module")
+def smoke_duck(smoke_dir):
+    con = _duck_views(smoke_dir)
     yield con
     con.close()
 
@@ -284,6 +301,34 @@ _EVENT_QUERIES = (
 )
 
 
+# Corpus queries whose plans cut lineage (checkpoint_tracked): the
+# always-on smoke, so a materialization-lifetime fault shows up as a
+# parity failure in the default suite.
+_SMOKE_QUERIES = (
+    "embedding_dedup_cascade_stats",
+    "leakage_safe_split_stats",
+    "semantic_dedup_cascade_stats",
+    "source_unigram_kl",
+    "term_cooccurrence_pmi",
+    "winnowing_neardup_pairs",
+)
+
+
+def _assert_parity(spark, d, con, name):
+    spec = registry.REGISTRY[name]
+    if spec.oracle is None:
+        pytest.skip("rows-only op")
+    assert_match(spec.fn(spark, d), con, spec.oracle, name)
+
+
+@pytest.mark.parametrize("name", _SMOKE_QUERIES)
+def test_randomized_corpus_oracle_parity_smoke(
+    spark, smoke_dir, smoke_duck, name
+):
+    _assert_parity(spark, smoke_dir, smoke_duck, name)
+
+
+@_FULL
 @pytest.mark.parametrize(
     "name",
     sorted(
@@ -294,12 +339,10 @@ _EVENT_QUERIES = (
     ),
 )
 def test_randomized_corpus_oracle_parity(spark, rand_dir, rand_duck, name):
-    spec = registry.REGISTRY[name]
-    if spec.oracle is None:
-        pytest.skip("rows-only op")
-    assert_match(spec.fn(spark, rand_dir), rand_duck, spec.oracle, name)
+    _assert_parity(spark, rand_dir, rand_duck, name)
 
 
+@_FULL
 def test_paraphrase_branch_fires_on_every_seed(spark, rand_dir):
     """The same-label replica clique (cosine 1.0) sits on doc_ids whose
     texts are independent random draws (Jaccard ~0), so every seed must
@@ -316,6 +359,7 @@ def test_paraphrase_branch_fires_on_every_seed(spark, rand_dir):
         assert r["text_jaccard"] < 0.5
 
 
+@_FULL
 def test_scaled_copies_tie_break_on_vec_id(spark, rand_dir):
     """The 2·v / v/2 rows have bit-equal cosine against any query: the
     returned order must be (cos DESC, vec_id ASC) — plan order leaking

@@ -613,6 +613,9 @@ def test_semantic_pair_cap_bounds_cluster_work(spark):
     per-cluster pair work is bounded at cap*(cap-1)/2 no matter how
     skewed the clustering gets. The plan carries the rank filter BELOW
     the self-join (work is cut before pairing, not after)."""
+    from apache_iceberg_with_clickhouse_olake_spark.operators._cache import (
+        keep_lineage,
+    )
     from apache_iceberg_with_clickhouse_olake_spark.operators.clustering import (
         _semantic_dropped,
     )
@@ -632,19 +635,14 @@ def test_semantic_pair_cap_bounds_cluster_work(spark):
     # self-join any more); the rank filter must sit BELOW it in the
     # plan tree (children print after parents), so only the cap
     # survivors ever reach the kernel -- work is still cut before
-    # pairing, not after. r20: the salted member frame is normally
-    # lineage-truncated (localCheckpoint hides the filter from the
-    # optimized plan), so the pin inspects the un-truncated seam; the
-    # only joins the salt machinery adds below the kernel are the
-    # broadcast count/total attaches, never a pair self-join.
-    plan = (
-        _semantic_dropped(
-            assigned, max_cluster_pair_members=cap, lineage_cut=False
-        )
-        ._jdf.queryExecution()
-        .optimizedPlan()
-        .toString()
-    )
+    # pairing, not after. The salted member frame is normally
+    # checkpointed (which hides the filter from the optimized plan), so
+    # the pin builds it with its lineage kept; the only joins the salt
+    # machinery adds below the kernel are the broadcast count/total
+    # attaches, never a pair self-join.
+    with keep_lineage():
+        uncut = _semantic_dropped(assigned, max_cluster_pair_members=cap)
+    plan = uncut._jdf.queryExecution().optimizedPlan().toString()
     kernel_at = plan.index("FlatMapGroupsInPandas")
     assert "row_number" in plan[kernel_at:], plan
     below = plan[kernel_at:]
