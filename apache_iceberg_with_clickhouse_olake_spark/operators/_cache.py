@@ -26,8 +26,8 @@ into any later plan that matches it.
   read after its scope drained fails loudly
   (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND).
 - Base-scope rule: whatever is materialized outside any scope (a
-  lazily returned, unscoped query; a plan test poking a builder) stays
-  until :func:`release_caches` runs there. Checkpoints are recorded by
+  lazily returned, unscoped query; a plan test building a frame
+  directly) stays until :func:`release_caches` runs there. Checkpoints are recorded by
   RDD id, not py4j handle, so the base scope pins no JVM object and
   Spark's ContextCleaner still reclaims an unscoped checkpoint once its
   frame is garbage.
@@ -35,8 +35,8 @@ into any later plan that matches it.
 :func:`keep_lineage` is a test seam: inside it, checkpoint_tracked
 returns its input unchanged, so a plan test sees what a cut hides.
 
-Queries execute sequentially per session (driver gate / pytest), so
-module-level state is safe here.
+Queries execute sequentially per Spark session, so module-level state
+is safe here.
 """
 
 from __future__ import annotations
